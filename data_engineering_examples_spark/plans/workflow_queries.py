@@ -17,6 +17,8 @@
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -26,6 +28,30 @@ from ..sources.tables import load_tables
 from .registry import register
 
 FX = FIXTURES_DIR
+
+# The sentinel-flush drains (q120, q242) emit their final rows only in
+# the engine's closing no-data micro-batch; with this off they silently
+# lose them, so those drains pin it on.
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
+@contextmanager
+def _pinned_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set session confs around a stream drain, then restore the previous
+    values (unset when there were none): the session is shared with the
+    analytic queries."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
 
 _POLL_PARAMS = {
     "_sort": "-authored-on",
@@ -461,9 +487,7 @@ def q83_stateful_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fewer state-store partitions cut per-batch fixed overhead; the
     # checkpoint pins the choice per query, and the session conf is
     # restored for the analytic queries that share it
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with _pinned_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
         q = (
             task_progress_stateful(stream)
             .writeStream.foreachBatch(
@@ -475,8 +499,6 @@ def q83_stateful_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     emissions = spark.read.parquet(out)
     last = Window.partitionBy("id").orderBy(F.desc("n_updates"))
@@ -528,9 +550,7 @@ def q84_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(inp)
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with _pinned_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
         q = (
             dedup_stream(stream)
             .writeStream.foreachBatch(
@@ -541,8 +561,6 @@ def q84_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.read.parquet(out).select("id", "status", "version_id")
 
 
@@ -791,9 +809,7 @@ def _stream_attribution(
         F.expr("timestampdiff(MICROSECOND, click_ts, purchase_ts)").alias("lag_us"),
     )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _pinned_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         q = (
             joined.writeStream.foreachBatch(
                 lambda df, _bid: df.write.mode("append").parquet(out)
@@ -803,8 +819,6 @@ def _stream_attribution(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.read.parquet(out)
 
 
@@ -900,11 +914,12 @@ def q120_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = Observation()
     feed.observe(obs, F.max("ts").alias("hi")).coalesce(1).write.parquet(inp)
     hi = obs.get["hi"]
-    spark.range(1).select(
-        F.lit(-1).cast("long").alias("user_id"),
-        F.lit(hi + _dt.timedelta(hours=2)).cast("timestamp").alias("ts"),
-        F.lit(0).cast("long").alias("vm"),
-    ).coalesce(1).write.mode("append").parquet(inp)
+    if hi is not None:  # empty feed -> no open session, nothing to flush
+        spark.range(1).select(
+            F.lit(-1).cast("long").alias("user_id"),
+            F.lit(hi + _dt.timedelta(hours=2)).cast("timestamp").alias("ts"),
+            F.lit(0).cast("long").alias("vm"),
+        ).coalesce(1).write.mode("append").parquet(inp)
 
     stream = (
         spark.readStream.schema("user_id long, ts timestamp, vm long")
@@ -932,9 +947,9 @@ def q120_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _pinned_conf(
+        spark, {"spark.sql.shuffle.partitions": "8", _NO_DATA_BATCHES: "true"}
+    ):
         q = (
             sessions.writeStream.foreachBatch(
                 lambda df, _bid: df.write.mode("append").parquet(out)
@@ -944,8 +959,6 @@ def q120_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.read.parquet(out).filter(F.col("user_id") >= 0)
 
 
@@ -1031,9 +1044,7 @@ def q130_stream_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("vm").alias("value_millis"),
     )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _pinned_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         q = (
             agg.writeStream.foreachBatch(
                 lambda df, _bid: writer.merge_incoming(
@@ -1046,8 +1057,6 @@ def q130_stream_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return writer.read()
 
 
@@ -1103,9 +1112,7 @@ def q144_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment", "event_type", "user_id", "vm"
     )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _pinned_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         q = (
             enriched.writeStream.foreachBatch(
                 lambda df, _bid: df.write.mode("append").parquet(out)
@@ -1115,8 +1122,6 @@ def q144_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     return (
         spark.read.parquet(out)
@@ -1298,14 +1303,14 @@ def q242_stream_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame
             ),
         ).write.mode("append").parquet(out)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     # 4 partitions, not q97's 8: the outer join holds EVERY click in
     # state until watermark eviction, so per-batch state-store commit
     # cost scales with partition count x batches; 8 -> 4 measured
     # 7.3s -> 4.2s at sf0.1 with identical output (state still fits
     # trivially; a production deployment sizes this to arrival rate)
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with _pinned_conf(
+        spark, {"spark.sql.shuffle.partitions": "4", _NO_DATA_BATCHES: "true"}
+    ):
         q = (
             joined.writeStream.foreachBatch(_write_batch)
             .option("checkpointLocation", f"{base}/ckpt")
@@ -1313,6 +1318,4 @@ def q242_stream_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.read.parquet(out)

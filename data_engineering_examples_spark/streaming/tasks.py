@@ -9,30 +9,33 @@ audit notes (``:128-234``). Here:
 * **poll** (T1/W1/P8) — the search-param dict becomes a filter + sort +
   limit over the tasks table; the version runaway guard (versionId>1000,
   ``:88``) and the completed-skip (``:404-411``) are predicates.
-* **stream** (S9: status writeback) — ``readStream`` over the tasks directory; each new file is
-  a micro-batch (the 1-minute poll becomes a trigger interval;
-  ``availableNow`` in tests). State transitions run in ``foreachBatch``
-  through the same set-based changeset algebra as L5 — on a Delta sink
-  this is a MERGE per micro-batch.
-* **at-least-once guards** (T2) — batch-local ``dropDuplicates`` on task
-  id (keep max version) + terminal-state check against the state table:
-  re-delivered tasks transition at most once; completed/failed/cancelled
-  never regress.
+* **stream** (S9: status writeback) — ``readStream`` over the tasks
+  directory; each new file is a micro-batch (the 1-minute poll becomes a
+  trigger interval; ``availableNow`` in tests). Each micro-batch runs in
+  ``foreachBatch`` as one MERGE statement (``_MERGE_SQL``): the
+  deduplicated batch FULL OUTER JOIN the state table on id, one fate per
+  row — keep, advance (or insert), drop — and one rewrite of the state.
+  On a Delta sink this is ``MERGE INTO`` per micro-batch.
+* **at-least-once guards** (T2) — batch-local dedup on task id (keep max
+  version, then the runaway guard) + terminal-state check against the
+  state row: re-delivered tasks transition at most once;
+  completed/failed/cancelled never regress.
 * **audit notes** (T3) — every transition appends ``{time, text}`` to the
-  notes array (``array_union``-style concat), mirroring ``:137-141``.
+  notes array, mirroring ``:137-141``.
 * **watermark** (T5) — ``task_throughput`` shows the windowed-aggregation
   form with ``withWatermark`` bounding late arrivals.
 
-Scale: state is keyed by task id — the MERGE shuffles on id only; the
-poll filter pushes to the scan. No driver loops; fan-out parallelism is
-partition parallelism, not one DAG run per task.
+Scale: state is keyed by task id — the MERGE scans the batch and the
+state once each and shuffles each once on id; the poll filter pushes to
+the scan. No per-task Python loop; fan-out parallelism is partition
+parallelism, not one DAG run per task.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -57,12 +60,6 @@ TASK_SCHEMA = T.StructType(
     ]
 )
 
-_NOTE = T.ArrayType(
-    T.StructType(
-        [T.StructField("time", T.StringType()), T.StructField("text", T.StringType())]
-    )
-)
-
 
 def poll_tasks(
     tasks: DataFrame,
@@ -85,16 +82,70 @@ def poll_tasks(
     )
 
 
-def _append_note(notes_col, text: str, ts_col):
-    """notes JSON string + one audit entry → JSON string (T3)."""
-    parsed = F.coalesce(
-        F.from_json(notes_col, _NOTE), F.array().cast(_NOTE)
-    )
-    entry = F.struct(
-        F.date_format(ts_col, "yyyy-MM-dd'T'HH:mm:ss+00:00").alias("time"),
-        F.lit(text).alias("text"),
-    )
-    return F.to_json(F.concat(parsed, F.array(entry)))
+_NOTE_DDL = "array<struct<time:string,text:string>>"
+
+# The MERGE of one micro-batch into the state table, as ONE statement: the
+# batch and the state are each scanned once and shuffled once on id, and a
+# single full outer join decides every row's fate:
+#
+# * advance — a non-terminal task in the batch moves one step, its
+#   version bumps and its audit note is appended (T3). The state row's
+#   fields win over the redelivery's (GET-latest-then-PUT,
+#   ConsultationNoteWritebackX.py:131-135); the delivery fills what the
+#   state lacks, and a task absent from the state is inserted this way;
+# * keep — a state row the batch leaves alone, or one already terminal
+#   (terminal states never regress, T2);
+# * drop — a task terminal on arrival (the WHERE).
+#
+# ``latest`` collapses re-deliveries inside the batch to the max version
+# BEFORE the runaway guard, so a task whose max version exceeds it is
+# dropped even when a lower version came in the same batch. The WHERE
+# tests the fate, not the CASE's result: a filter on the result would be
+# pushed below the projection and evaluate the note rewrite twice. The
+# clock is the ``:now`` parameter (NULL means now()).
+_CUR_STATUS = "coalesce(s.status, b.status)"
+_TERMINAL_SQL = ", ".join(f"'{t}'" for t in TERMINAL)
+_NEXT_SQL = " ".join(f"WHEN '{a}' THEN '{n}'" for a, n in NEXT_STATUS.items())
+_ADVANCE = f"b.rn = 1 AND {_CUR_STATUS} NOT IN ({_TERMINAL_SQL})"
+_MERGE_SQL = f"""
+WITH latest AS (
+  SELECT * FROM (
+    SELECT *, row_number() OVER (PARTITION BY id ORDER BY version_id DESC) AS rn
+    FROM {{batch}}
+  ) WHERE rn = 1 AND version_id <= {VERSION_RUNAWAY}
+)
+SELECT r.* FROM (
+  SELECT CASE WHEN {_ADVANCE} THEN named_struct(
+      'id', b.id,
+      'status', CASE {_CUR_STATUS} {_NEXT_SQL} ELSE {_CUR_STATUS} END,
+      'authored_on', coalesce(s.authored_on, b.authored_on),
+      'version_id', coalesce(s.version_id, b.version_id) + 1,
+      'focus_identifier_system',
+        coalesce(s.focus_identifier_system, b.focus_identifier_system),
+      'focus_identifier_value',
+        coalesce(s.focus_identifier_value, b.focus_identifier_value),
+      'note', to_json(concat(
+        coalesce(from_json(coalesce(s.note, b.note), '{_NOTE_DDL}'),
+                 CAST(array() AS {_NOTE_DDL})),
+        array(named_struct(
+          'time', date_format(
+            coalesce(CAST(:now AS TIMESTAMP_NTZ), CAST(now() AS TIMESTAMP_NTZ)),
+            'yyyy-MM-dd\\'T\\'HH:mm:ss+00:00'),
+          'text', 'transition')))),
+      'output', coalesce(s.output, b.output),
+      'resource_string', coalesce(s.resource_string, b.resource_string))
+    ELSE named_struct(
+      'id', s.id, 'status', s.status, 'authored_on', s.authored_on,
+      'version_id', s.version_id,
+      'focus_identifier_system', s.focus_identifier_system,
+      'focus_identifier_value', s.focus_identifier_value,
+      'note', s.note, 'output', s.output, 'resource_string', s.resource_string)
+  END AS r
+  FROM latest b
+  FULL OUTER JOIN (SELECT *, TRUE AS in_state FROM {{state}}) s ON b.id = s.id
+  WHERE ({_ADVANCE}) OR s.in_state
+)
+"""
 
 
 class TaskStateMachine:
@@ -102,19 +153,19 @@ class TaskStateMachine:
 
     ``process_batch`` is a ``foreachBatch`` target: it advances every
     non-terminal incoming task one transition, appends the audit note,
-    and rewrites the state table. On Delta this whole body is one
-    ``MERGE INTO state USING batch ON id WHEN MATCHED/NOT MATCHED``.
+    and rewrites the state table. The whole body is one SQL statement
+    (``_MERGE_SQL``): the deduplicated batch FULL OUTER JOIN the state on
+    id, one fate per row — keep, advance (or insert), drop — the shape of
+    ``MERGE INTO state USING batch ON id WHEN MATCHED/NOT MATCHED`` on
+    Delta. Each input is scanned and shuffled once, and the plan is
+    built in one analyzer pass.
     """
 
     def __init__(self, spark: SparkSession, state_dir: str, now_utc: str | None = None):
         self.spark = spark
         self.state_dir = state_dir
         # injectable clock for replayable tests; prod passes None → now()
-        self._now = (
-            F.lit(now_utc).cast("timestamp_ntz")
-            if now_utc
-            else F.now().cast("timestamp_ntz")
-        )
+        self._now_utc = now_utc
 
     def _recover(self) -> None:
         """Crash recovery for the rename swap: dying between the two
@@ -127,73 +178,34 @@ class TaskStateMachine:
         Runs once per batch entry (and per cold ``state()`` read), NOT
         per state-frame construction: a crash can only interleave with a
         swap, and ``process_batch`` swaps exactly once at its end — so
-        the two state reads inside one batch see the same recovered
-        layout, and an object store pays one existence probe (a LIST
-        round-trip on S3/GCS) per batch instead of two."""
+        the state read inside one batch sees the recovered layout, and
+        an object store pays one existence probe (a LIST round-trip on
+        S3/GCS) per batch."""
         from ..sources.layout import recover_swap
 
         recover_swap(self.state_dir)
 
     def state(self) -> DataFrame:
         self._recover()
-        return self._state_frame()
+        return self._state_frame(self.spark)
 
-    def _state_frame(self) -> DataFrame:
+    def _state_frame(self, session: SparkSession) -> DataFrame:
         """Plain read of the (already-recovered) state dir."""
         if os.path.exists(os.path.join(self.state_dir, "_SUCCESS")):
-            return self.spark.read.schema(TASK_SCHEMA).parquet(self.state_dir)
-        return self.spark.createDataFrame([], TASK_SCHEMA)
+            return session.read.schema(TASK_SCHEMA).parquet(self.state_dir)
+        return session.createDataFrame([], TASK_SCHEMA)
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         self._recover()
-        # T2: collapse re-deliveries inside the batch — keep max version
-        latest = (
-            batch.withColumn(
-                "_rn",
-                F.row_number().over(
-                    Window.partitionBy("id").orderBy(F.desc("version_id"))
-                ),
-            )
-            .filter((F.col("_rn") == 1) & (F.col("version_id") <= VERSION_RUNAWAY))
-            .drop("_rn")
-        )
-
-        # the state row (when present) is the truth a redelivery must NOT
-        # overwrite — read-modify-write like the reference's GET-latest-
-        # then-PUT (ConsultationNoteWritebackX.py:131-135), but set-based
-        state = self._state_frame().select(
-            "id", *[F.col(c).alias(f"st_{c}") for c in TASK_SCHEMA.names if c != "id"]
-        )
-        joined = latest.join(state, "id", "left")
-
-        def cur(c: str):
-            return F.coalesce(F.col(f"st_{c}"), F.col(c))
-
-        # terminal states never regress (T2); others advance one step
-        cur_status = cur("status")
-        nxt = F.coalesce(
-            *[
-                F.when(cur_status == a, F.lit(b)).otherwise(F.lit(None))
-                for a, b in NEXT_STATUS.items()
-            ],
-            cur_status,
-        )
-        advanced = joined.filter(~cur_status.isin(*TERMINAL)).select(
-            "id",
-            nxt.alias("status"),
-            cur("authored_on").alias("authored_on"),
-            (cur("version_id") + 1).alias("version_id"),
-            cur("focus_identifier_system").alias("focus_identifier_system"),
-            cur("focus_identifier_value").alias("focus_identifier_value"),
-            _append_note(cur("note"), "transition", self._now).alias("note"),
-            cur("output").alias("output"),
-            cur("resource_string").alias("resource_string"),
-        )
-
-        new_state = (
-            self._state_frame()
-            .join(advanced.select("id"), "id", "left_anti")
-            .unionByName(advanced)
+        # foreachBatch hands over a frame of a cloned session; the temp
+        # views ``sql`` creates for {batch}/{state} are session-scoped, so
+        # the state is read, and the statement run, in the batch's session
+        session = batch.sparkSession
+        new_state = session.sql(
+            _MERGE_SQL,
+            args={"now": self._now_utc},
+            batch=batch,
+            state=self._state_frame(session),
         )
         # state_dir is both source and sink, so the new state is written
         # executor-side to a temp dir while the old dir is still readable,

@@ -73,11 +73,12 @@ def test_bench_repeat_reports_median_and_spread(tmp_path):
 
 
 def test_bench_substrate_builds_are_timed_entries(tmp_path):
-    """r13 verdict ask #1: substrate build costs must be visible.  With
-    the prebuild enabled, every memo_substrate build appears as its own
-    ``substrate__<name>`` entry in ``queries`` (counted in ``value``),
-    and substrate-consuming queries are tagged in ``substrate_warm`` —
-    their own numbers measure warm serving, not the build."""
+    """Substrate build costs must be visible.  With the prebuild enabled,
+    every memo_substrate build appears as its own timed entry in the
+    record's ``substrates`` map, and stays out of both ``queries`` and
+    ``value``.  Substrate-consuming queries are tagged in
+    ``substrate_warm`` — their own numbers measure warm serving, not the
+    build."""
     env = dict(os.environ)
     env["SPARK_GRAFT_SF_DIR"] = "/root/testdata/sf0.001"
     env["SPARK_GRAFT_BENCH_ONLY"] = "q23_ngram_jaccard_pairs"

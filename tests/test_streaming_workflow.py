@@ -10,6 +10,7 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_examples_spark.functions.documents import (
@@ -19,7 +20,10 @@ from data_engineering_examples_spark.functions.documents import (
 )
 from data_engineering_examples_spark.sources.fhir import FIXTURES_DIR, load_fhir_tables
 from data_engineering_examples_spark.streaming.tasks import (
+    NEXT_STATUS,
     TASK_SCHEMA,
+    TERMINAL,
+    VERSION_RUNAWAY,
     TaskStateMachine,
     poll_tasks,
     task_throughput,
@@ -102,6 +106,190 @@ def test_state_machine_two_batches_and_idempotence(spark, tmp_path):
     b3.coalesce(1).write.mode("append").parquet(in_dir)
     sm.run_available(in_dir, ckpt)
     assert {r.id: r.status for r in sm.state().collect()}["t1"] == "completed"
+
+
+# ---------------------------------------------------------------------------
+# Model-based check of the MERGE: seeded polls through TaskStateMachine,
+# compared after every poll with a plain-Python replay of the same rules.
+
+_MODEL_NOW = "2025-08-01 00:00:00"
+_MODEL_NOTE = {"time": "2025-08-01T00:00:00+00:00", "text": "transition"}
+
+
+def _model_poll(state: dict, batch: list[dict]) -> None:
+    """The state machine's contract, one poll: keep each id's max version,
+    drop it above the runaway guard, take every field from the state row
+    when it has one (else from the delivery), and advance non-terminal
+    tasks one step with one appended audit note."""
+    latest: dict[str, dict] = {}
+    for t in batch:
+        if t["id"] not in latest or t["version_id"] > latest[t["id"]]["version_id"]:
+            latest[t["id"]] = t
+    for tid, t in latest.items():
+        if t["version_id"] > VERSION_RUNAWAY:
+            continue
+        held = state.get(tid, {})
+        cur = {c: t[c] if held.get(c) is None else held[c] for c in TASK_SCHEMA.names}
+        if cur["status"] in TERMINAL:
+            continue
+        notes = json.loads(cur["note"]) if cur["note"] is not None else []
+        state[tid] = {
+            **cur,
+            "status": NEXT_STATUS.get(cur["status"], cur["status"]),
+            "version_id": cur["version_id"] + 1,
+            "note": json.dumps(notes + [_MODEL_NOTE], separators=(",", ":")),
+        }
+
+
+def _model_batch(rnd, poll: int, state: dict) -> list[dict]:
+    import datetime as dt
+
+    def task(tid, status, version, note=True):
+        return {
+            "id": tid,
+            "status": status,
+            "authored_on": None
+            if rnd.random() < 0.2
+            else dt.datetime(2025, 7, 1) + dt.timedelta(minutes=rnd.randrange(10_000)),
+            "version_id": version,
+            "focus_identifier_system": rnd.choice([None, "sys"]),
+            "focus_identifier_value": f"ENC-{tid}",
+            "note": json.dumps([{"time": "2025-07-01T00:00:00+00:00", "text": tid}])
+            if note and rnd.random() < 0.7
+            else None,
+            "output": "[]",
+            "resource_string": "{}",
+        }
+
+    statuses = ["accepted"] * 4 + ["in-progress", "requested", "completed", "failed"]
+    batch = [
+        task(f"p{poll}-{i}", rnd.choice(statuses), rnd.randint(1, 20)) for i in range(30)
+    ]
+    batch += [
+        # the same id twice at different versions: the max version wins,
+        # whether it is the non-terminal or the terminal delivery
+        task(f"p{poll}-twice-a", "completed", 3),
+        task(f"p{poll}-twice-a", "accepted", 7),
+        task(f"p{poll}-twice-b", "accepted", 3),
+        task(f"p{poll}-twice-b", "completed", 7),
+        # max version above the guard: dropped despite a lower version
+        task(f"p{poll}-runaway", "accepted", 5),
+        task(f"p{poll}-runaway", "accepted", VERSION_RUNAWAY + 1),
+        task(f"p{poll}-done", "cancelled", 2),  # terminal on arrival
+        task(f"p{poll}-nonote", "in-progress", 4, note=False),
+    ]
+    if poll == 0:
+        batch.append(task("finisher", "in-progress", 1))  # completes in poll 0
+    else:
+        # a redelivery of a task already terminal in state
+        assert state["finisher"]["status"] == "completed"
+        batch.append(task("finisher", "accepted", 9))
+        known = sorted(k for k in state if k != "finisher")
+        guarded, *redelivered = rnd.sample(known, 11)
+        # a runaway redelivery must leave the state row untouched
+        batch += [
+            task(guarded, "accepted", 2),
+            task(guarded, "accepted", VERSION_RUNAWAY + 2),
+        ]
+        batch += [
+            task(tid, rnd.choice(["accepted", "in-progress"]), rnd.randint(1, 30))
+            for tid in redelivered
+        ]
+    rnd.shuffle(batch)
+    return batch
+
+
+def test_state_machine_matches_python_model(spark, tmp_path):
+    import random
+
+    in_dir = str(tmp_path / "in")
+    os.makedirs(in_dir)
+    sm = TaskStateMachine(spark, str(tmp_path / "state"), now_utc=_MODEL_NOW)
+    rnd = random.Random(7)
+    model: dict[str, dict] = {}
+    for poll in range(4):
+        batch = _model_batch(rnd, poll, model)
+        spark.createDataFrame(
+            [tuple(t[c] for c in TASK_SCHEMA.names) for t in batch], TASK_SCHEMA
+        ).coalesce(1).write.mode("append").parquet(in_dir)
+        sm.run_available(in_dir, str(tmp_path / "ckpt"))
+        _model_poll(model, batch)
+
+        rows = [r.asDict() for r in sm.state().collect()]
+        got = {r["id"]: r for r in rows}
+        assert len(got) == len(rows), f"poll {poll}: duplicate ids in state"
+        assert got.keys() == model.keys(), f"poll {poll}"
+        wrong = sorted(k for k in model if got[k] != model[k])
+        assert not wrong, (poll, got[wrong[0]], model[wrong[0]])
+    assert model["finisher"]["version_id"] == 2  # transitioned exactly once
+
+
+def test_merge_plan_scans_state_once(spark, tmp_path, monkeypatch):
+    """The frame handed to swap_write reads the state directory exactly
+    once: batch and state meet in one full outer join, not a join plus
+    an anti-join/union over a second state read."""
+    from data_engineering_examples_spark.sources import layout
+
+    state_dir = str(tmp_path / "state")
+    scans: list[int] = []
+    swap_write = layout.swap_write
+
+    def spy(df, path, *a, **kw):
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        roots = [
+            leaves.apply(i).relation().location().rootPaths().mkString(",")
+            for i in range(leaves.size())
+            if leaves.apply(i).nodeName() == "LogicalRelation"
+        ]
+        scans.append(sum(r.rstrip("/").endswith(state_dir) for r in roots))
+        swap_write(df, path, *a, **kw)
+
+    monkeypatch.setattr(layout, "swap_write", spy)
+    in_dir = str(tmp_path / "in")
+    os.makedirs(in_dir)
+    sm = TaskStateMachine(spark, state_dir, now_utc=_MODEL_NOW)
+    for rows in ([_task_row(1), _task_row(2)], [_task_row(1), _task_row(3)]):
+        spark.createDataFrame(rows, TASK_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(in_dir)
+        sm.run_available(in_dir, str(tmp_path / "ckpt"))
+    # poll 1 starts from no state; poll 2 merges into the state dir
+    assert scans == [0, 1]
+
+
+_SENTINEL_DRAINS = ("q120_stream_sessions", "q242_stream_attribution_outer")
+
+
+@pytest.mark.parametrize("name", _SENTINEL_DRAINS)
+def test_sentinel_drain_survives_empty_feed(spark, sf_dir, tmp_path, name):
+    """No events: no sentinel is staged and the drain returns no rows."""
+    import pyarrow.parquet as pq
+
+    from data_engineering_examples_spark.plans.registry import all_specs
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    events = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    pq.write_table(events.slice(0, 0), sf / "events.parquet")
+    assert all_specs()[name].fn(spark, str(sf)).count() == 0
+
+
+@pytest.mark.parametrize("name", _SENTINEL_DRAINS)
+def test_sentinel_drain_pins_no_data_batches(spark, sf_dir, name):
+    """The final rows flush in the closing no-data micro-batch: a session
+    with no-data batches off gets the same rows, and keeps its setting."""
+    from data_engineering_examples_spark.plans.registry import all_specs
+
+    fn = all_specs()[name].fn
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    want = sorted(map(tuple, fn(spark, sf_dir).collect()))
+    spark.conf.set(key, "false")
+    try:
+        got = sorted(map(tuple, fn(spark, sf_dir).collect()))
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.unset(key)
+    assert got == want
 
 
 def test_task_throughput_watermark(spark, tmp_path):
